@@ -58,17 +58,8 @@ def write_roundtrip(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="tickstore_rt_")
     store = TickStore(spark, root)
     store.write(bars, mode="overwrite")
-    out = store.read(uids=["1", "2", "3"], columns=["open", "high", "low", "close", "volume"])
-    # partition column comes back as the partition directory's string value
-    return out.select(
-        F.col("uid").cast("string").alias("uid"),
-        "ts",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume",
-    )
+    # uid comes back in its written dtype (string), from the schema sidecar
+    return store.read(uids=["1", "2", "3"], columns=["open", "high", "low", "close", "volume"])
 
 
 @query(

@@ -20,6 +20,26 @@ scans stream in time order per uid without a sort. For very high uid
 cardinality (100 TB, millions of uids) use ``bucket_uids=N`` to hash uids
 into N directories instead of one-dir-per-uid (avoids small-file explosion
 while keeping pruning ~N-fold effective).
+
+Read path: on a store TickStore wrote, building a read that names its uids
+runs no Spark job; its scan is the only one.
+
+- **Schema from the sidecar.** Every write records the union of the
+  columns it has seen, with their dtypes, in ``_schema.json``. A read hands
+  that schema to ``spark.read.schema(...)``, so Spark neither samples file
+  footers nor re-infers the type of the ``uid`` directory values; files
+  from older appends return NULL for columns they lack. A directory that
+  TickStore did not write has no sidecar and falls back to Spark's schema
+  inference with ``mergeSchema``.
+- **Uid directories as paths.** On the plain uid layout a read that names
+  its uids opens only ``data/<uid_col>=<value>`` for those that exist
+  (value escaped with Spark's own partition-path rule), so Spark lists a
+  few directories on the driver instead of the whole store. The read falls
+  back to scanning the whole store, pruned by the ``uid`` filter, when no
+  requested directory exists, on the bucketed layout, when there is no
+  sidecar, and when the uid dtype is neither string nor integral (the
+  directory text of other types is not ``str(uid)``) or a requested uid is
+  not a Python value of that dtype.
 """
 
 from __future__ import annotations
@@ -28,10 +48,11 @@ import json
 import os
 from dataclasses import dataclass
 from datetime import datetime
+from numbers import Integral
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, StringType, StructType
 
 
 @dataclass
@@ -56,9 +77,13 @@ class TickStore:
         """Append a frame. Mirrors corintick write: validates ts presence,
         optionally detects overlap with existing data for the same uids
         (api.py::Corintick.write † overlap warning), partitions by uid.
+
+        An append may add columns but not change the dtype of an existing
+        one: that raises ``ValueError`` before any file is written.
         """
         if self.uid_col not in df.columns or self.ts_col not in df.columns:
             raise ValueError(f"frame must have {self.uid_col!r} and {self.ts_col!r}")
+        schema = self._merged_schema(df.schema) if mode == "append" else df.schema
         if check_overlap and self._exists():
             # bounded action: only up to 10 example uids ever reach the driver
             sample = self.overlap_conflicts(df).select(self.uid_col).limit(10).collect()
@@ -74,30 +99,45 @@ class TickStore:
             .partitionBy(*part_cols)
             .parquet(self._data_dir())
         )
-        # Schema sidecar: partition-directory values lose their type (Spark
-        # re-infers them on read — a string uid '3' comes back as int), the
-        # corintick dtype round-trip guarantee (serialization.py † dtype
-        # strings) needs the written schema recorded. Appends with NEW
-        # columns merge into the sidecar (corintick allowed different chunks
-        # of one uid to carry different column sets † — SURVEY §1.1), with
-        # the latest write winning per-column. Local-FS write; on a real
-        # cluster this sidecar lives next to the dataset via the hadoop FS
-        # API.
-        os.makedirs(self.root, exist_ok=True)
-        schema = df.schema
-        if mode == "append" and os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                prior = StructType.fromJson(json.load(fh))
-            new_names = set(schema.fieldNames())
-            merged = list(schema.fields) + [
-                f for f in prior.fields if f.name not in new_names
-            ]
-            schema = StructType(merged)
-        with open(self._schema_path(), "w") as fh:
-            fh.write(schema.json())
+        self._save_schema(schema)
         if metadata:
             self.put_metadata(metadata)
             self._log_write_metadata(df, metadata)
+
+    def _merged_schema(self, schema: StructType) -> StructType:
+        """The sidecar schema after appending a frame of ``schema``: the
+        frame's columns first, then stored columns it lacks (corintick let
+        chunks of one uid carry different column sets † — SURVEY §1.1).
+        Raises ``ValueError`` when a column would change dtype: the files
+        already written keep the old one, and no read could serve both."""
+        prior = self._written_schema()
+        if prior is None:
+            return schema
+        for f in schema.fields:
+            if f.name not in prior.fieldNames():
+                continue
+            # simpleString ignores nullability, which Parquet reads tolerate
+            old, new = prior[f.name].dataType.simpleString(), f.dataType.simpleString()
+            if old != new:
+                raise ValueError(
+                    f"append changes the dtype of column {f.name!r}: "
+                    f"stored {old}, appended {new}"
+                )
+        names = set(schema.fieldNames())
+        return StructType(
+            list(schema.fields) + [f for f in prior.fields if f.name not in names]
+        )
+
+    def _save_schema(self, schema: StructType) -> None:
+        """Record the store's schema in the ``_schema.json`` sidecar, which
+        every read takes as its schema. Partition-directory values carry no
+        type (a string uid '3' would come back as int), so this is also the
+        corintick dtype round-trip guarantee (serialization.py † dtype
+        strings). Local-FS write; on a real cluster the sidecar lives next
+        to the dataset via the Hadoop FS API."""
+        os.makedirs(self.root, exist_ok=True)
+        with open(self._schema_path(), "w") as fh:
+            fh.write(schema.json())
 
     def _partitioned(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
         """Apply the store's configured partition layout (plain uid, hashed
@@ -127,25 +167,32 @@ class TickStore:
         start: str | datetime | None = None,
         end: str | datetime | None = None,
         columns: list[str] | None = None,
-        merge_schema: bool = False,
     ) -> DataFrame:
-        """read(uid, start, end, columns): partition pruning on uid, pushed
-        ts range filter (row-group stats do the chunk-level prune), column
+        """read(uid, start, end, columns): uid directory seek, pushed ts
+        range filter (row-group stats do the chunk-level prune), column
         pruning — each the Catalyst analogue of the reference's index seek,
         interval filter, and Mongo projection (api.py::Corintick.read †).
         Range semantics inclusive of both ends, like DataFrame.loc[start:end].
 
-        ``merge_schema=True`` unions the schemas of every data file
-        (columns absent from older appends come back NULL) — corintick
-        allowed different chunks of one uid to carry different column sets
-        (SURVEY §1.1 †); heterogeneous appends need this flag to see every
-        column. The default stays False: schema merging foots the bill of a
-        footer read per file, which a 100 TB store pays only when asked.
+        The schema is the ``_schema.json`` sidecar: every column any write
+        appended, in its written dtype, NULL in rows whose write lacked it.
+        With ``uids`` on the plain uid layout only those uids' directories
+        are opened; the bucketed layout, a store without a sidecar, or a
+        uid that cannot name a directory read the whole store instead (see
+        the module docstring). Either way the result is the same rows, and
+        building it runs no Spark job on a store with a sidecar.
         """
+        written = self._written_schema()
         reader = self.spark.read
-        if merge_schema:
+        if written is None:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self._data_dir())
+        else:
+            reader = reader.schema(written)
+        paths = self._uid_paths(uids, written)
+        if paths:
+            df = reader.option("basePath", self._data_dir()).parquet(*paths)
+        else:
+            df = reader.parquet(self._data_dir())
         if self.bucket_uids and "uid_bucket" in df.columns and uids is not None:
             # Bucket-level partition pruning: hash the requested uids with
             # the same (dtype-faithful) function the write path used, so a
@@ -161,12 +208,6 @@ class TickStore:
             if end is not None:
                 df = df.filter(F.col("_date") <= F.lit(end).cast("date"))
             df = df.drop("_date")
-        if os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                written = StructType.fromJson(json.load(fh))
-            for f in written.fields:
-                if f.name in df.columns and df.schema[f.name].dataType != f.dataType:
-                    df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
         if uids is not None:
             df = df.filter(F.col(self.uid_col).isin(list(uids)))
         if start is not None:
@@ -179,6 +220,41 @@ class TickStore:
             ]
             df = df.select(*keep)
         return df
+
+    def _uid_paths(self, uids: list | None, written: StructType | None) -> list[str]:
+        """The existing ``data/<uid_col>=<value>`` directories of ``uids``,
+        or [] when the read must scan the whole store: no uids, the
+        bucketed layout, no sidecar dtype for the uid, a dtype whose
+        directory text is not ``str(value)``, a uid that is not a value of
+        that dtype, or no requested directory on disk."""
+        if uids is None or self.bucket_uids or written is None:
+            return []
+        if self.uid_col not in written.fieldNames():
+            return []
+        dtype = written[self.uid_col].dataType
+        if isinstance(dtype, StringType):
+            kind = str
+        elif isinstance(dtype, IntegralType):
+            kind = Integral
+        else:
+            return []
+        wanted = [u for u in uids if u is not None]
+        if any(not isinstance(u, kind) or isinstance(u, bool) for u in wanted):
+            return []
+        paths = [self._uid_dir(u) for u in dict.fromkeys(wanted)]
+        return [p for p in paths if os.path.isdir(p)]
+
+    def _uid_dir(self, uid) -> str:
+        """``data/<uid_col>=<uid>`` on the plain layout, escaped with Spark's
+        own partition-path rule so the name is the one its writer chose
+        (ExternalCatalogUtils.getPartitionPathString)."""
+        escape = (
+            self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName
+        )
+        return os.path.join(
+            self._data_dir(), f"{escape(self.uid_col)}={escape(str(uid))}"
+        )
 
     # -- streaming ingestion (north_star: live tick ingestion via Spark) ----
     def append_stream(
@@ -203,24 +279,17 @@ class TickStore:
             raise NotImplementedError(
                 "streaming append currently supports the plain uid layout"
             )
-        data_dir = self._data_dir()
-        uid_col, ts_col = self.uid_col, self.ts_col
 
-        # foreachBatch + the normal batch writer, NOT the parquet streaming
-        # sink: the file sink's _spark_metadata log would make batch reads
-        # of the directory ignore every non-streaming-written file (so a
-        # store seeded by batch writes would silently lose them).
+        # foreachBatch + the batch writer, NOT the parquet streaming sink:
+        # the file sink's _spark_metadata log would make batch reads of the
+        # directory ignore every non-streaming-written file (so a store
+        # seeded by batch writes would silently lose them). write() also
+        # keeps the schema sidecar current for stream-only stores.
         def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
             if merge:
                 self.upsert(batch_df)
-                return
-            (
-                batch_df.repartition(F.col(uid_col))
-                .sortWithinPartitions(ts_col)
-                .write.mode("append")
-                .partitionBy(uid_col)
-                .parquet(data_dir)
-            )
+            else:
+                self.write(batch_df)
 
         writer = (
             stream_df.writeStream.foreachBatch(_write_batch)
@@ -235,8 +304,8 @@ class TickStore:
         """The store as a streaming source: new files appended by writers
         (batch or streaming) arrive as micro-batches — the live read side
         of the tick store."""
-        batch = self.read()
-        return self.spark.readStream.schema(batch.schema).parquet(self._data_dir())
+        schema = self._written_schema() or self.read().schema
+        return self.spark.readStream.schema(schema).parquet(self._data_dir())
 
     # -- catalog: api.py::Corintick.list_uids † -----------------------------
     def list_uids(self) -> DataFrame:
@@ -361,11 +430,10 @@ class TickStore:
         data_dir = self._data_dir()
         tmp_dir = data_dir + ".compact_tmp"
         old_dir = data_dir + ".compact_old"
-        # merge_schema: heterogeneous appends must not lose columns in the
-        # rewrite; _partitioned(): the rewrite must reproduce the store's
-        # configured layout (uid buckets / date level), not reset it to
-        # plain-uid partitioning.
-        out, part_cols = self._partitioned(self.read(merge_schema=True))
+        # _partitioned(): the rewrite must reproduce the store's configured
+        # layout (uid buckets / date level), not reset it to plain-uid
+        # partitioning.
+        out, part_cols = self._partitioned(self.read())
         out = out.repartition(*[F.col(c) for c in part_cols])
         if zorder_by:
             from corintick_spark.operators.zorder import with_zvalue
@@ -411,7 +479,7 @@ class TickStore:
             return
         from pyspark.sql import Window as W
 
-        old = self.read(merge_schema=True).withColumn("_prio", F.lit(0))
+        old = self.read().withColumn("_prio", F.lit(0))
         new = df.withColumn("_prio", F.lit(1))
         for c in old.columns:
             if c not in new.columns:
@@ -446,6 +514,8 @@ class TickStore:
         os.rename(data_dir, old_dir)
         os.rename(tmp_dir, data_dir)
         shutil.rmtree(old_dir)
+        # the rewrite holds every column of both sides, in unionByName's dtypes
+        self._save_schema(merged.schema)
 
     def delete_uid(self, uid) -> bool:
         """Drop one uid's data. With plain uid partitioning this is a pure
@@ -461,12 +531,12 @@ class TickStore:
         if not self.bucket_uids:
             # one uid == one partition directory (possibly with date
             # sub-partitions inside) — removal is a file operation
-            part = os.path.join(data_dir, f"{self.uid_col}={uid}")
+            part = self._uid_dir(uid)
             if not os.path.exists(part):
                 return False
             shutil.rmtree(part)
             return True
-        existing = self.read(merge_schema=True)
+        existing = self.read()
         if existing.filter(F.col(self.uid_col) == F.lit(uid)).limit(1).count() == 0:
             return False
         kept, part_cols = self._partitioned(
@@ -528,7 +598,7 @@ class TickStore:
         tmp_dir = data_dir + ".vacuum_tmp"
         old_dir = data_dir + ".vacuum_old"
         kept, part_cols = self._partitioned(
-            self.read(merge_schema=True).filter(
+            self.read().filter(
                 F.col(self.ts_col).cast("date") >= F.lit(cutoff.isoformat()).cast("date")
             )
         )
@@ -560,17 +630,22 @@ class TickStore:
     def _schema_path(self) -> str:
         return os.path.join(self.root, "_schema.json")
 
+    def _written_schema(self) -> StructType | None:
+        """The sidecar schema, or None for a store TickStore did not write."""
+        if not os.path.exists(self._schema_path()):
+            return None
+        with open(self._schema_path()) as fh:
+            return StructType.fromJson(json.load(fh))
+
     def _buckets_for(self, uids: list) -> list[int]:
         """Bucket ids for the given uids, hashed with the written uid dtype
         (xxhash64(string) != xxhash64(long) — the sidecar keeps them aligned)."""
-        from pyspark.sql.types import StringType, StructField, StructType
+        from pyspark.sql.types import StructField
 
         dtype = StringType()
-        if os.path.exists(self._schema_path()):
-            with open(self._schema_path()) as fh:
-                written = StructType.fromJson(json.load(fh))
-            if self.uid_col in written.fieldNames():
-                dtype = written[self.uid_col].dataType
+        written = self._written_schema()
+        if written is not None and self.uid_col in written.fieldNames():
+            dtype = written[self.uid_col].dataType
         tiny = self.spark.createDataFrame(
             [(u,) for u in uids], StructType([StructField(self.uid_col, dtype)])
         )

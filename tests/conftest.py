@@ -43,6 +43,12 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_connected_components_random_vs_union_find",
         "test_pagerank_matches_numpy_power_iteration",
         "test_operators_accept_empty_inputs",
+        # TickStore read route (sidecar schema, uid directories as paths)
+        # and the sidecar's write-side contracts
+        "test_tickstore_uid_read_route",
+        "test_tickstore_append_dtype_change_raises",
+        "test_tickstore_stream_only_store_reads_by_uid",
+        "test_tickstore_schema_evolution_merge_read",
     },
     "test_snapshots.py": {
         # append_split landed this round (stream_cdf_partitioned path)

@@ -152,7 +152,7 @@ def test_tickstore_per_write_metadata(spark, tmp_path):
 
 def test_tickstore_schema_evolution_merge_read(spark, tmp_path):
     """Two appends with differing column sets (corintick's per-chunk dynamic
-    schemas, SURVEY §1.1): merge_schema=True surfaces the union, older rows
+    schemas, SURVEY §1.1): the default read surfaces the union, older rows
     NULL in the new column; sidecar keeps both dtypes."""
     from corintick_spark.storage import TickStore
 
@@ -166,14 +166,173 @@ def test_tickstore_schema_evolution_merge_read(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     store.write(df1, mode="overwrite")
     store.write(df2, mode="append")
-    merged = store.read(merge_schema=True).orderBy("ts")
+    merged = store.read().orderBy("ts")
     assert "extra" in merged.columns
     rows = merged.select("value", "extra").collect()
     assert [(r["value"], r["extra"]) for r in rows] == [(1.0, None), (2.0, 7)]
     # compact must keep the evolved column too
     store.compact()
-    post = store.read(merge_schema=True)
+    post = store.read()
     assert "extra" in post.columns and post.count() == 2
+
+
+def test_tickstore_append_dtype_change_raises(spark, tmp_path):
+    """An append that changes an existing column's dtype fails loudly,
+    naming the column, before any file is written; the store still reads."""
+    import datetime as dt
+    import os
+
+    from corintick_spark.storage import TickStore
+
+    store = TickStore(spark, str(tmp_path / "dtype"))
+    ts = dt.datetime(2024, 1, 1)
+    store.write(
+        spark.createDataFrame(
+            [("a", ts, 1.0, 1, 5)], "uid string, ts timestamp, value double, n int, k bigint"
+        ),
+        mode="overwrite",
+    )
+
+    def files():
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(store._data_dir()) for f in fs
+        )
+
+    before = files()
+    for col, row, frame_schema in (
+        ("value", ("b", ts, 2, 2, 2), "uid string, ts timestamp, value bigint, n int, k bigint"),
+        ("n", ("b", ts, 2.0, 2, 2), "uid string, ts timestamp, value double, n bigint, k bigint"),
+        ("k", ("b", ts, 2.0, 2, "2"), "uid string, ts timestamp, value double, n int, k string"),
+    ):
+        with pytest.raises(ValueError, match=repr(col)):
+            store.write(spark.createDataFrame([row], frame_schema), mode="append")
+        assert files() == before
+    assert [tuple(r) for r in store.read().select("uid", "value", "n", "k").collect()] == [
+        ("a", 1.0, 1, 5)
+    ]
+
+
+def _same_rows(got, want) -> None:
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_tickstore_uid_read_route(spark, tmp_path):
+    """A uid read opens only the named uid directories and takes its schema
+    from the sidecar: each result equals a filter over the full store, a
+    uid with no data gives zero rows with the full schema, and building
+    the read runs no Spark job."""
+    import datetime as dt
+    import itertools
+    import os
+
+    from corintick_spark.storage import TickStore
+
+    d = lambda day, h=0: dt.datetime(2024, 1, day, h)
+    groups = (f"uid_read_route_{i}" for i in itertools.count())
+    rows = [
+        (u, d(day, h), float(i), i)
+        for i, (u, day, h) in enumerate(
+            (u, day, h)
+            for u in ("x/y=z", "007", "a", "b c%")
+            for day in (1, 2, 3)
+            for h in (0, 12)
+        )
+    ]
+    schema = "uid string, ts timestamp, value double, n int"
+    cases = [
+        ("x/y=z",), ("007",), ("x/y=z", "a", "007"), ("b c%", "no-data"), ("no-data",),
+    ]
+    sc = spark.sparkContext
+
+    def check(store, cases, start=None, end=None):
+        full = store.read()
+        assert set(full.columns) == set(store.read(uids=[cases[0][0]]).columns)
+        for uids in cases:
+            group = next(groups)
+            sc.setJobGroup(group, group)
+            try:
+                got = store.read(uids=list(uids), start=start, end=end)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            if store._uid_paths(list(uids), store._written_schema()):
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            want = full.filter(F.col("uid").isin(list(uids)))
+            if start is not None:
+                want = want.filter(F.col("ts") >= F.lit(start).cast("timestamp"))
+            if end is not None:
+                want = want.filter(F.col("ts") <= F.lit(end).cast("timestamp"))
+            _same_rows(got, want)
+            assert got.count() == sum(
+                1 for r in rows
+                if r[0] in uids
+                and (start is None or r[1] >= dt.datetime.fromisoformat(start))
+                and (end is None or r[1] <= dt.datetime.fromisoformat(end))
+            )
+
+    plain = TickStore(spark, str(tmp_path / "plain"))
+    plain.write(spark.createDataFrame(rows, schema), mode="overwrite")
+    assert os.path.isdir(os.path.join(plain._data_dir(), "uid=x%2Fy%3Dz"))
+    check(plain, cases)
+    check(plain, cases, start="2024-01-02", end="2024-01-02 12:00:00")
+    assert dict(plain.read(uids=["007"]).dtypes)["uid"] == "string"
+    assert plain.read(uids=["no-data"]).count() == 0
+
+    dated = TickStore(spark, str(tmp_path / "dated"), partition_by_date=True)
+    dated.write(spark.createDataFrame(rows, schema), mode="overwrite")
+    check(dated, cases, start="2024-01-02", end="2024-01-03")
+
+    ints = TickStore(spark, str(tmp_path / "ints"))
+    ints.write(
+        spark.createDataFrame(
+            [(i % 5, d(1 + i % 3), float(i), i) for i in range(30)],
+            "uid bigint, ts timestamp, value double, n int",
+        ),
+        mode="overwrite",
+    )
+    full = ints.read()
+    assert dict(full.dtypes)["uid"] == "bigint"
+    for uids in ([3], [0, 4], [99]):
+        _same_rows(ints.read(uids=uids), full.filter(F.col("uid").isin(uids)))
+    assert ints._uid_paths([3], ints._written_schema())
+
+    # a directory TickStore did not write: no sidecar, so schema inference
+    # (with merging) over the whole store
+    foreign = TickStore(spark, str(tmp_path / "foreign"))
+    spark.createDataFrame(rows, schema).write.partitionBy("uid").parquet(foreign._data_dir())
+    assert foreign._written_schema() is None
+    full = foreign.read()
+    assert set(full.columns) == {"uid", "ts", "value", "n"}
+    _same_rows(foreign.read(uids=["a"]), full.filter(F.col("uid") == "a"))
+    assert foreign.read(uids=["a"]).count() == 6
+
+
+def test_tickstore_stream_only_store_reads_by_uid(spark, tmp_path):
+    """A store written only by append_stream keeps its schema sidecar, so
+    uid reads take the same directory route and return the streamed rows."""
+    import datetime as dt
+
+    from corintick_spark.storage import TickStore
+
+    rows = [(f"u{i % 4}", dt.datetime(2024, 1, 1 + i % 3), float(i)) for i in range(24)]
+    src_df = spark.createDataFrame(rows, "uid string, ts timestamp, value double")
+    stage = str(tmp_path / "stage")
+    src_df.write.parquet(stage)
+    store = TickStore(spark, str(tmp_path / "stream_only"))
+    q = store.append_stream(
+        spark.readStream.schema(src_df.schema).parquet(stage),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_available_now=True,
+    )
+    q.awaitTermination()
+    written = store._written_schema()
+    assert written is not None and written.simpleString() == src_df.schema.simpleString()
+    assert store._uid_paths(["u1", "u2"], written)
+    got = store.read(uids=["u1", "u2"])
+    assert sorted((r["uid"], r["ts"], r["value"]) for r in got.collect()) == sorted(
+        r for r in rows if r[0] in ("u1", "u2")
+    )
+    assert set(store.stream().columns) == {"uid", "ts", "value"}
 
 
 def test_tickstore_compact_preserves_layout(spark, tmp_path):
