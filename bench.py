@@ -150,8 +150,6 @@ def main() -> None:
     def run_suite(names: list[str], drop_first: bool = False) -> tuple[dict, dict]:
         import gc
 
-        from corintick_spark.operators.ckpt import release_all_persistent
-
         samples: dict[str, list[float]] = {n: [] for n in names}
         for _ in range(passes):
             for name in names:
@@ -161,22 +159,12 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 samples[name].append(time.perf_counter() - t0)
-                # drop py4j refs promptly so the ContextCleaner can reclaim
-                # finished queries' localCheckpoint blocks between samples
-                # (iterative ops release in-loop blocks themselves — ckpt.py
-                # — but their final frames ride the GC path)
+                # the finished query's checkpoint blocks are freed by the
+                # ContextCleaner once both the Python and the JVM side have
+                # collected its frame (ckpt.py); collect both here, outside
+                # the timed region, so blocks never pile up across queries
                 gc.collect()
-                # Measurement-hygiene fix (round 11, guide §5 "unpersist
-                # when done"): gc.collect() alone is NOT enough — the JVM
-                # Dataset must also be garbage-collected before the
-                # ContextCleaner queues the unpersist, and with a 16 GB
-                # heap that lags by many queries. Leaked localCheckpoint
-                # blocks (~1 GB/suite pass) degraded extras medians 10-60x
-                # by pass 3 while minima stayed flat. The query's result
-                # is fully materialized by the noop sink above and its
-                # frame dropped, so releasing every leftover block here is
-                # outside the timed region and changes no result.
-                release_all_persistent(spark)
+                spark.sparkContext._jvm.System.gc()
         # drop_first: the heavy iterative extras (pagerank, survivors, PQ
         # fit) pay one-time session costs (codegen, broadcast warmup,
         # checkpoint dirs) on pass 1 that made driver-bench medians read

@@ -1,19 +1,17 @@
-"""Explicit storage release for eagerly localCheckpointed DataFrames.
+"""Storage release for eagerly localCheckpointed DataFrames.
 
-``Dataset.unpersist()`` is a silent NO-OP on a localCheckpointed frame:
+``Dataset.unpersist()`` is a silent no-op on a localCheckpointed frame:
 the checkpoint's blocks are owned by the underlying RDD (the Dataset was
-never registered with the CacheManager), so they are reclaimed only when
-the ContextCleaner notices the RDD is garbage — which, through the py4j
-reference chain, can lag Python GC by a long time. An iterative operator
-that checkpoints per round (connected components, PageRank-style loops)
-therefore ACCUMULATES every round's blocks for the life of the query and
-can OOM the JVM on repeated heavy runs (observed: dedup_clusters at sf10,
-two bench passes in one session — round-7 diagnosis).
+never registered with the CacheManager). One rule governs their lifetime:
 
-``release_local_checkpoint`` frees the blocks deterministically by
-unpersisting the checkpointed RDD itself (the ``LogicalRDD`` the
-checkpointed frame wraps). After the call the frame CANNOT be evaluated
-again — only release frames whose consumers have all run.
+- an iterative loop releases each round's checkpoint with
+  ``release_local_checkpoint`` once the next round has materialized, so a
+  loop holds at most a round or two of blocks;
+- a checkpoint that feeds a returned frame stays resident, and Spark's
+  ContextCleaner frees it once nothing (Python or JVM) can reach it.
+  Harnesses that want that promptly run ``gc.collect()`` followed by a
+  JVM ``System.gc()``; ``session.get_spark`` also bounds the lag with
+  ``spark.cleaner.periodicGC.interval``.
 """
 
 from __future__ import annotations
@@ -23,92 +21,14 @@ from pyspark.sql import DataFrame
 
 def release_local_checkpoint(df: DataFrame) -> None:
     """Best-effort immediate release of an eagerly localCheckpointed
-    frame's storage blocks. Safe no-op on anything else; falls back to
-    ContextCleaner/GC if the internal plan shape is not the expected
-    LogicalRDD (e.g. Spark Connect, future Spark versions)."""
+    frame's storage blocks. After the call the frame cannot be evaluated
+    again — only release frames whose consumers have all run. Safe no-op
+    on anything else; falls back to the ContextCleaner if the internal
+    plan shape is not the expected LogicalRDD (e.g. Spark Connect, future
+    Spark versions)."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
             plan.rdd().unpersist(False)
     except Exception:
-        pass  # py4j internals — the GC path remains the fallback
-
-
-# --- operator-scoped release (round 12, verdict r11 item 7) ---------------
-#
-# A query body necessarily RETURNS a frame that still reads its
-# localCheckpoint blocks, so the operator cannot release them before
-# returning — but it CAN release the blocks its *previous* invocation
-# left behind, because by the time the caller invokes the operator again
-# the earlier result has been consumed (materialized or abandoned) in any
-# sequential workload. Each operator passes a stable key and its
-# result-feeding checkpointed frames here; a long-lived session's leak is
-# then bounded at ONE generation per operator instead of growing without
-# limit — no harness-level global release needed.
-#
-# TWO generations are kept (round 12): releasing the immediately-previous
-# one broke the legitimate A/B pattern `a = op(...); b = op(...);
-# compare(a, b)` — the second call stripped the first result's blocks
-# before the caller evaluated it (loud CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-# caught by tests/test_prefix_filter.py). With two generations that
-# pattern works and the long-session leak stays bounded at <= 2
-# generations per operator.
-#
-# Contract: safe whenever at most TWO results of the SAME operator are
-# held unconsumed at once (true for the bench, the driver, sequential
-# notebooks, and pairwise comparisons). Callers holding three or more
-# live results should consume (materialize) them before further calls,
-# as with any localCheckpoint-backed frame.
-
-_GENERATIONS: dict[str, list] = {}
-
-
-def rotate_generation(key: str, *frames) -> None:
-    """Register ``frames`` as ``key``'s newest generation and release the
-    generation TWO invocations back (bounded leak, A/B-safe)."""
-    gens = _GENERATIONS.setdefault(key, [])
-    gens.append(list(frames))
-    while len(gens) > 2:
-        for old in gens.pop(0):
-            release_local_checkpoint(old)
-
-
-def release_all_persistent(spark) -> int:
-    """Unpersist EVERY persisted / localCheckpointed RDD in the session.
-
-    Query bodies necessarily leave their RESULT-feeding checkpoints alive
-    (the caller has not materialized yet when the operator returns), and
-    ``Dataset.unpersist`` cannot reach them afterwards (see module
-    docstring) — so a long-lived session that runs many queries
-    accumulates blocks until the heap thrashes (observed round 11: the
-    full bench's extras medians degraded 10-60x by pass 3 while per-query
-    minima stayed flat; ~1 GB of leaked blocks per suite pass).
-
-    Harnesses call this BETWEEN queries, after the current query's result
-    is fully materialized (noop sink / toPandas) and its frame dropped: at
-    that point no live computation depends on any persisted block, and
-    the next query re-derives its own. Never call it while a query's
-    returned frame is still going to be read. Returns the number of RDDs
-    released (0 on any py4j/Connect incompatibility — GC path remains the
-    fallback).
-
-    Runtime guard (ADVICE r11): an ACTIVE streaming query may hold state /
-    cached RDDs this hammer would strip mid-run — refuse (return 0) while
-    ``spark.streams.active`` is non-empty rather than silently corrupt it.
-    """
-    try:
-        if spark.streams.active:
-            return 0
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        rdds = list(jmap.values())
-    except Exception:
-        return 0
-    n = 0
-    for rdd in rdds:
-        # per-RDD try (ADVICE r11): one bad RDD must not abort the rest
-        try:
-            rdd.unpersist(False)
-            n += 1
-        except Exception:
-            pass
-    return n
+        pass  # py4j internals — the ContextCleaner remains the fallback

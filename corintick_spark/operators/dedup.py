@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import rotate_generation
 from corintick_spark.operators.spread import spread_input
 
 
@@ -134,12 +133,6 @@ def minhash_lsh_pairs(
     # live on executors and cannot survive executor loss.
     sig = minhash_signature(shingles(src, text, k), "shingles", num_hashes)
     sig = sig.localCheckpoint(eager=True)
-    # operator-scoped release (round 12, verdict r11 item 7): the sig
-    # checkpoint feeds this call's RESULT, so it cannot be released here —
-    # registering it releases the PREVIOUS invocation's generation instead,
-    # bounding a long session's leaked blocks at one generation per
-    # operator (see ckpt.rotate_generation).
-    rotate_generation("dedup.minhash_lsh_pairs", sig)
     # Candidate generation is ID-ONLY: shingle arrays never ride through the
     # band join or the pair-dedup exchange (at 100 TB that exchange would
     # otherwise carry two full shingle arrays per pre-dedup candidate row).
@@ -328,8 +321,6 @@ def incremental_neardup(
     # MinHash/Jaccard path — feeds the band join AND the verification
     # join-back; materialize once
     new_sig = new_sigs.localCheckpoint(eager=True)
-    # previous invocation's generation released here (ckpt.rotate_generation)
-    rotate_generation("dedup.incremental_neardup", new_sig)
     nb = _band_explode(new_sig.withColumnRenamed(id_col, "doc_id"), "new_id", num_hashes, bands)
     cb = _band_explode(
         signature_table.withColumnRenamed(id_col, "doc_id"), "corpus_id", num_hashes, bands
@@ -601,8 +592,6 @@ def hamming_pairs(
     # corpus. Filtering the eagerly materialized checkpoint costs one
     # in-memory pass and keeps every downstream row identical.
     _ckpt = sigs.select(id_col, *cols, *within).localCheckpoint(eager=True)
-    # previous invocation's generation released here (ckpt.rotate_generation)
-    rotate_generation("dedup.hamming_pairs", _ckpt)
     sigs = _ckpt.filter(notnull)
     # One count over the materialized checkpoint feeds BOTH the scheme
     # escalation and the exchange sizing (inherited plan estimates are
@@ -845,8 +834,6 @@ def hamming_join(
     # Corpus side: filter FIRST — it reads a persisted signature table,
     # so the notnull predicate pushes into the parquet scan instead.
     _ckpt = new_sigs.select(id_col, *cols).localCheckpoint(eager=True)
-    # previous invocation's generation released here (ckpt.rotate_generation)
-    rotate_generation("dedup.hamming_join", _ckpt)
     new = notnull(_ckpt)
     corpus = notnull(corpus_sigs).select(id_col, *cols)
 
@@ -1013,8 +1000,6 @@ def ngram_jaccard_pairs(
     )
     # one physical pass feeds df-counting, prefix build, and verification
     words = words.localCheckpoint(eager=True)
-    # previous invocation's generation released here (ckpt.rotate_generation)
-    rotate_generation("dedup.ngram_jaccard_pairs", words)
     max_block = (
         words.groupBy("_blk").count().agg(F.max("count")).first()[0] or 0
     )

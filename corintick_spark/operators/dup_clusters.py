@@ -72,7 +72,8 @@ def connected_components(
 
     edges: undirected pair list (each edge once, any orientation). Node ids
     must be totally ordered (numeric or string). Converges in O(log n)
-    alternating-star rounds; ``max_iter`` is a safety cap far above that.
+    alternating-star rounds; ``max_iter`` is a safety cap far above that,
+    and exhausting it without reaching the fixpoint raises RuntimeError.
 
     ``broadcast_nodes_max``: when the node count is at or below this, each
     star round's per-center minimum table (≤ |nodes| rows) is broadcast
@@ -148,16 +149,18 @@ def connected_components(
         if stat == prev_stat:
             break
         prev_stat = stat
+    else:
+        # the label read-off below is only correct at the star-forest
+        # fixpoint; short of it a node can carry several comp rows
+        raise RuntimeError(
+            f"connected_components did not reach its fixpoint within "
+            f"max_iter={max_iter} rounds"
+        )
 
     # fixpoint is a disjoint star forest: (child, root) edges covering the
     # original node set — children are the non-root nodes, roots the
-    # component minima. The final e MUST stay resident here (the caller
-    # has not evaluated labels yet), so the NEXT invocation releases it
-    # instead (ckpt.rotate_generation, round 12: bounded long-session
-    # leak).
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("dup_clusters.connected_components", e)
+    # component minima. The final e stays resident: the caller has not
+    # evaluated labels yet.
     labels = e.select(
         F.col("u").alias("node"), F.col("v").alias("comp")
     ).unionByName(

@@ -144,11 +144,4 @@ def bfs_hops(
         if frontier is not old:
             release_local_checkpoint(frontier)
         frontier = nxt
-    # result-feeding frames (visited; final frontier == last nxt, whose
-    # blocks visited's union consumed but which may be the level-0 frame
-    # itself; the edge checkpoint) are released by the NEXT invocation
-    # (ckpt.rotate_generation, round 12 — bounded long-session leak)
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("graph.bfs", visited, frontier, e)
     return visited

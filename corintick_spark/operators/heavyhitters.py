@@ -110,10 +110,6 @@ def heavy_hitters(
     # eagerly materialize so src can be released before returning (the
     # result is <= |candidates| rows)
     out = out.localCheckpoint(eager=True)
-    # previous invocation's generation released here (ckpt.rotate_generation)
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("heavyhitters", out)
     src.unpersist()
     folded.unpersist()
     return out

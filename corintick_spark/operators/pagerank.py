@@ -297,11 +297,6 @@ def pagerank(
         if tol > 0.0 and ranks.agg(F.sum("_diff")).first()[0] < tol:
             break
     result = ranks.select("node", "rank")
-    # the final rank checkpoint feeds the result — the NEXT invocation
-    # releases it (ckpt.rotate_generation, round 12)
-    from corintick_spark.operators.ckpt import rotate_generation
-
-    rotate_generation("pagerank", ranks)
     for frame in (norm, nodes, e):
         frame.unpersist()
     return result

@@ -13,6 +13,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -73,15 +74,11 @@ def main() -> int:
             problems, status = [f"{type(e).__name__}: {e}"], "ERROR"
             pdf = None
         dt = time.time() - t0
-        # the query is fully materialized (toPandas) — release every
-        # leftover persisted/localCheckpointed block so a 350-query sweep
-        # doesn't accumulate them for the session's life (ckpt.py)
-        import gc as _gc
-
-        _gc.collect()
-        from corintick_spark.operators.ckpt import release_all_persistent
-
-        release_all_persistent(spark)
+        # the query is fully materialized (toPandas): collect its frame on
+        # both sides so the ContextCleaner frees its checkpoint blocks
+        # before the next query (ckpt.py)
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
         ok = status in ("MATCH", "ROWS-ONLY-OK")
         n_ok += ok
         n_bad += not ok

@@ -11,6 +11,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -78,12 +79,8 @@ def main() -> None:
             vals.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
             # same post-materialization block hygiene as bench.py
-            import gc as _gc
-
-            _gc.collect()
-            from corintick_spark.operators.ckpt import release_all_persistent
-
-            release_all_persistent(spark)
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
         samples[name] = [round(v, 3) for v in vals]
         # warm median: drop the first pass when >1 pass ran
         timed = vals[1:] if len(vals) > 1 else vals

@@ -1,89 +1,18 @@
-"""Coverage for the round-11 session-lifetime leak fixes (ADVICE r11):
-release_all_persistent and the streaming worker-spawn-flake retry matcher.
-Without these, a Spark upgrade that changes py4j internals or the exception
-message would silently revert both to no-ops.
+"""Checkpoint lifetime (operators/ckpt.py) and the streaming worker-spawn
+flake retry matcher. Loops release their own rounds; returned frames keep
+their blocks until the ContextCleaner sees them unreachable, so any number
+of live results stays evaluable and a long session stays bounded.
 """
 
 from __future__ import annotations
 
-
-def _persistent_count(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+import gc
 
 
-def test_release_all_persistent_releases_blocks(spark):
-    from corintick_spark.operators.ckpt import release_all_persistent
-
-    # clean slate (other session-scoped tests may have leaked frames)
-    release_all_persistent(spark)
-    assert _persistent_count(spark) == 0
-
-    df = spark.range(1000).localCheckpoint(eager=True)
-    cached = spark.range(500).persist()
-    cached.count()
-    assert _persistent_count(spark) >= 2
-
-    n = release_all_persistent(spark)
-    assert n >= 2
-    assert _persistent_count(spark) == 0
-    del df, cached
-
-
-def test_release_all_persistent_refuses_during_active_stream(spark):
-    """The session-global hammer must not strip an active streaming query's
-    state (ADVICE r11 guard)."""
-    from corintick_spark.operators.ckpt import release_all_persistent
-
-    leaked = spark.range(10).localCheckpoint(eager=True)
-
-    class _Streams:
-        active = [object()]  # pretend a query is running
-
-    class _FakeSession:
-        streams = _Streams()
-        sparkContext = spark.sparkContext
-
-    assert release_all_persistent(_FakeSession()) == 0
-    assert _persistent_count(spark) >= 1  # nothing was released
-    assert release_all_persistent(spark) >= 1  # real session releases
-    del leaked
-
-
-def test_release_all_persistent_survives_bad_rdd(spark):
-    """One RDD failing to unpersist must not abort the rest (ADVICE r11)."""
-    from corintick_spark.operators import ckpt
-
-    good = spark.range(100).localCheckpoint(eager=True)
-
-    class _BadRDD:
-        def unpersist(self, blocking):
-            raise RuntimeError("boom")
-
-    real_get = spark.sparkContext._jsc.getPersistentRDDs
-
-    class _JSC:
-        @staticmethod
-        def getPersistentRDDs():
-            jmap = real_get()
-
-            class _Map:
-                @staticmethod
-                def values():
-                    return [_BadRDD(), *list(jmap.values())]
-
-            return _Map()
-
-    class _SC:
-        _jsc = _JSC()
-
-    class _FakeSession:
-        streams = spark.streams
-        sparkContext = _SC()
-
-    n = ckpt.release_all_persistent(_FakeSession())
-    assert n >= 1  # the real RDD was still released past the bad one
-    assert _persistent_count(spark) == 0
-    del good
+def _collect_garbage(spark) -> None:
+    """Python then JVM GC: what lets the ContextCleaner see dropped frames."""
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
 
 def test_worker_spawn_flake_matcher():
@@ -99,28 +28,40 @@ def test_worker_spawn_flake_matcher():
     assert not _worker_spawn_flake(RuntimeError("FileNotFoundException"))
 
 
+def test_three_live_bfs_results_all_evaluate(spark):
+    """Results of one operator stay evaluable however many are held:
+    calling it again must not free an earlier result's blocks."""
+    from corintick_spark.operators.graph import bfs_hops
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    results = [bfs_hops(edges, seeds) for _ in range(3)]
+    expected = [(0, 0), (1, 1), (2, 2), (3, 3)]
+    for r in results:
+        assert sorted(tuple(row) for row in r.collect()) == expected
+
+
 def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
-    """Round-12 operator-scoped release (verdict r11 item 7): 20 heavy
-    query runs in ONE session, with NO harness-level global release —
-    the persistent-RDD count must stay bounded (one generation per
-    operator via ckpt.rotate_generation), not grow per run.
+    """30 heavy query runs in ONE session with no explicit release of
+    returned frames: once they are garbage the ContextCleaner frees their
+    checkpoint blocks, so the persistent-RDD count stays bounded instead
+    of growing per pass.
 
     Round 11 measured ~1 GB of leaked localCheckpoint blocks per suite
-    pass without this (extras medians degraded 10-60x by pass 3)."""
-    from corintick_spark.operators.ckpt import release_all_persistent
+    pass when returned frames' blocks were never freed (extras medians
+    degraded 10-60x by pass 3)."""
     from corintick_spark.registry import load_all
 
     registry = load_all()
-    # rotation-wired operators' registered queries (nndescent/ANN frames
-    # deliberately ride the GC path — GraphIndex holds results across
-    # operator calls, see ann_index.py)
+    # queries whose operators keep checkpoints alive in their returned
+    # frames
     names = [
         "dedup_minhash", "dedup_ngram", "dedup_survivors",
         "dedup_clusters", "dedup_image_phash", "graph_pagerank",
         "graph_bfs", "sql_recursive", "agg_group_median",
         "text_heavyhitters",
     ]
-    release_all_persistent(spark)  # clean slate from other tests
+    _collect_garbage(spark)  # clean slate from other tests
 
     def persistent() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -131,12 +72,12 @@ def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
             registry[n].spark(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
+        _collect_garbage(spark)
         counts.append(persistent())
-    # two generations are kept per operator (A/B-safe rotation), so the
     # steady state is reached by pass 2: pass 3 must not accumulate past
-    # it by more than one extra generation's worth of frames
+    # it by more than a couple of frames
     assert counts[2] <= counts[1] + 2, counts
-    # and the absolute count stays at ~two generations per operator,
-    # nowhere near the grow-per-pass shape of the unrotated code
+    # and the absolute count stays at a few frames per operator, nowhere
+    # near the grow-per-pass shape of never-freed blocks
     assert counts[2] <= 5 * len(names), counts
-    release_all_persistent(spark)
+    _collect_garbage(spark)

@@ -550,6 +550,18 @@ def test_connected_components_path_graph_high_diameter(spark):
     assert set(comp.values()) == {0}
 
 
+def test_connected_components_max_iter_exhausted_raises(spark):
+    """Stopping short of the fixpoint must fail loudly, not return a
+    partial label table."""
+    from corintick_spark.operators.dup_clusters import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
+
 def test_connected_components_random_vs_union_find(spark):
     """Randomized differential vs a driver-side union-find oracle."""
     import random
