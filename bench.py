@@ -148,7 +148,7 @@ def main() -> None:
     passes = 3
 
     def run_suite(names: list[str], drop_first: bool = False) -> tuple[dict, dict]:
-        import gc
+        from corintick_spark.operators.ckpt import collect_released
 
         samples: dict[str, list[float]] = {n: [] for n in names}
         for _ in range(passes):
@@ -159,12 +159,9 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 samples[name].append(time.perf_counter() - t0)
-                # the finished query's checkpoint blocks are freed by the
-                # ContextCleaner once both the Python and the JVM side have
-                # collected its frame (ckpt.py); collect both here, outside
-                # the timed region, so blocks never pile up across queries
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
+                # free the finished query's checkpoint blocks outside the
+                # timed region (ckpt.py)
+                collect_released(spark)
         # drop_first: the heavy iterative extras (pagerank, survivors, PQ
         # fit) pay one-time session costs (codegen, broadcast warmup,
         # checkpoint dirs) on pass 1 that made driver-bench medians read

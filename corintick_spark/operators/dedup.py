@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
+from corintick_spark.operators.ckpt import local_checkpoint
 from corintick_spark.operators.spread import spread_input
 
 
@@ -132,7 +133,7 @@ def minhash_lsh_pairs(
     # signature table to durable storage instead: localCheckpoint blocks
     # live on executors and cannot survive executor loss.
     sig = minhash_signature(shingles(src, text, k), "shingles", num_hashes)
-    sig = sig.localCheckpoint(eager=True)
+    sig = local_checkpoint(sig)
     # Candidate generation is ID-ONLY: shingle arrays never ride through the
     # band join or the pair-dedup exchange (at 100 TB that exchange would
     # otherwise carry two full shingle arrays per pre-dedup candidate row).
@@ -320,7 +321,7 @@ def incremental_neardup(
         )
     # MinHash/Jaccard path — feeds the band join AND the verification
     # join-back; materialize once
-    new_sig = new_sigs.localCheckpoint(eager=True)
+    new_sig = local_checkpoint(new_sigs)
     nb = _band_explode(new_sig.withColumnRenamed(id_col, "doc_id"), "new_id", num_hashes, bands)
     cb = _band_explode(
         signature_table.withColumnRenamed(id_col, "doc_id"), "corpus_id", num_hashes, bands
@@ -591,7 +592,7 @@ def hamming_pairs(
     # every token once per lane, measured 0.9s -> 11-19s on the sf0.1
     # corpus. Filtering the eagerly materialized checkpoint costs one
     # in-memory pass and keeps every downstream row identical.
-    _ckpt = sigs.select(id_col, *cols, *within).localCheckpoint(eager=True)
+    _ckpt = local_checkpoint(sigs.select(id_col, *cols, *within))
     sigs = _ckpt.filter(notnull)
     # One count over the materialized checkpoint feeds BOTH the scheme
     # escalation and the exchange sizing (inherited plan estimates are
@@ -833,7 +834,7 @@ def hamming_join(
     # re-inlines the whole signature expression into the predicate).
     # Corpus side: filter FIRST — it reads a persisted signature table,
     # so the notnull predicate pushes into the parquet scan instead.
-    _ckpt = new_sigs.select(id_col, *cols).localCheckpoint(eager=True)
+    _ckpt = local_checkpoint(new_sigs.select(id_col, *cols))
     new = notnull(_ckpt)
     corpus = notnull(corpus_sigs).select(id_col, *cols)
 
@@ -999,7 +1000,7 @@ def ngram_jaccard_pairs(
         "_n", F.size("wset")
     )
     # one physical pass feeds df-counting, prefix build, and verification
-    words = words.localCheckpoint(eager=True)
+    words = local_checkpoint(words)
     max_block = (
         words.groupBy("_blk").count().agg(F.max("count")).first()[0] or 0
     )

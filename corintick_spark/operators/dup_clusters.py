@@ -26,7 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import (
+    local_checkpoint,
+    release_local_checkpoint,
+)
 
 
 def _large_star(sym: DataFrame, bcast: bool) -> DataFrame:
@@ -72,8 +75,10 @@ def connected_components(
 
     edges: undirected pair list (each edge once, any orientation). Node ids
     must be totally ordered (numeric or string). Converges in O(log n)
-    alternating-star rounds; ``max_iter`` is a safety cap far above that,
-    and exhausting it without reaching the fixpoint raises RuntimeError.
+    alternating-star rounds; ``max_iter`` is a safety cap far above that
+    on the rounds that change the edge list. A graph whose edge list is
+    not the fixpoint after ``max_iter`` rounds raises RuntimeError (one
+    more round confirms a fixpoint reached exactly at the cap).
 
     ``broadcast_nodes_max``: when the node count is at or below this, each
     star round's per-center minimum table (≤ |nodes| rows) is broadcast
@@ -87,22 +92,28 @@ def connected_components(
     )
 
     # canonical directed (larger, smaller) start state
-    e = (
+    e = local_checkpoint(
         raw.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
-    ).localCheckpoint(eager=True)
-    # ONE aggregate over the materialized edge list feeds both the
-    # broadcast decision (exact node count) and the first round's
-    # checkpoint sizing (edge count). Round 12 (guide §1.2 — don't compute
+    )
+    # ONE aggregate over the materialized edge list feeds the broadcast
+    # decision (exact node count), the first round's checkpoint sizing
+    # (edge count) and the start state's convergence stat (edge count +
+    # hash, counted once per edge at pos 0). Round 12 (guide §1.2 — don't compute
     # things you throw away): the old shape ALSO built and eagerly
     # checkpointed a distinct node table here just so the label join after
     # the loop could read it — but the fixpoint star forest contains
     # exactly the original node set (every non-root as a child `u`, every
     # root as a `v`), so labels can be read straight off the final tiny
     # forest and the full-size node distinct+checkpoint disappears.
-    head = e.select(F.explode(F.array("u", "v")).alias("n")).agg(
-        F.countDistinct("n").alias("nn"), F.count(F.lit(1)).alias("e2")
+    head = e.select(
+        F.posexplode(F.array("u", "v")).alias("pos", "n"),
+        F.xxhash64("u", "v").alias("h"),
+    ).agg(
+        F.countDistinct("n").alias("nn"),
+        F.count(F.lit(1)).alias("e2"),
+        F.expr("bit_xor(CASE WHEN pos = 0 THEN h END)").alias("h"),
     ).first()
     n_nodes, n_edges = int(head["nn"]), int(head["e2"]) // 2
     bcast = n_nodes <= broadcast_nodes_max
@@ -120,15 +131,17 @@ def connected_components(
             edges.sparkSession.sparkContext.defaultParallelism,
         ))
 
-    prev_stat = None
+    prev_stat = (n_edges, head["h"])
     n_in = n_edges
-    for _ in range(max_iter):
+    # round max_iter + 1 only confirms that round max_iter's edge list is
+    # the fixpoint
+    for _ in range(max_iter + 1):
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # eager localCheckpoint: materialize AND truncate lineage each round
         new_e = (
             _small_star(_large_star(sym, bcast), bcast)
             .coalesce(_nparts(n_in))
-            .localCheckpoint(eager=True)
+            .transform(local_checkpoint)
         )
         # one tiny action on the materialized frame: count + order-free hash
         # (bit_xor, not sum: ANSI mode throws on int64 sum overflow, and the

@@ -24,7 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import (
+    local_checkpoint,
+    release_local_checkpoint,
+)
 
 
 def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -106,7 +109,7 @@ def bfs_hops(
         seeds.select(F.col(node).cast("long").alias(node))
         .distinct()
         .select(node, F.lit(0).alias("hops"))
-        .localCheckpoint()
+        .transform(local_checkpoint)
     )
     # materialize the edge list ONCE before the loop (round 11): every
     # level joins against e, and without the checkpoint each level
@@ -116,7 +119,7 @@ def bfs_hops(
     # cached norm table.
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct().transform(local_checkpoint)
     frontier = visited
     frontier_rows = frontier.count()
     for level in range(1, max_iter + 1):
@@ -129,13 +132,13 @@ def bfs_hops(
             .distinct()
             .join(visited.select(node), node, "left_anti")
             .select(node, F.lit(level).alias("hops"))
-            .localCheckpoint()
+            .transform(local_checkpoint)
         )
         frontier_rows = nxt.count()
         if frontier_rows == 0:
             break
         old = visited
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited = local_checkpoint(visited.unionByName(nxt))
         # real block release per level (Dataset.unpersist is a no-op on
         # localCheckpointed frames — ckpt.py); the previous frontier is
         # also done once the new visited materialized, except at level 1

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from corintick_spark.operators.ckpt import local_checkpoint
+
 
 def _mg_partition(
     it: Iterator[pd.DataFrame], k: int, col: str
@@ -109,7 +111,7 @@ def heavy_hitters(
     )
     # eagerly materialize so src can be released before returning (the
     # result is <= |candidates| rows)
-    out = out.localCheckpoint(eager=True)
+    out = local_checkpoint(out)
     src.unpersist()
     folded.unpersist()
     return out

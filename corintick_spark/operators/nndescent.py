@@ -47,7 +47,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import (
+    local_checkpoint,
+    release_local_checkpoint,
+)
 from corintick_spark.operators.similarity import _cosine, _dot, _norm2
 from corintick_spark.operators.spread import spread_input
 
@@ -119,7 +122,7 @@ def knn_graph(
     besides the per-round checkpoint is a corpus count to size buckets.
     """
     bk = build_k or k
-    vecs = spread_input(_prep(corpus, id_col, vec_col)).localCheckpoint()
+    vecs = local_checkpoint(spread_input(_prep(corpus, id_col, vec_col)))
     n = vecs.count()
     if n == 0:
         return vecs.sparkSession.createDataFrame(
@@ -144,7 +147,7 @@ def knn_graph(
     init = init.distinct()
     graph = _top_k(
         _score_pairs(init, vecs).filter(F.col("score").isNotNull()), bk
-    ).localCheckpoint()
+    ).transform(local_checkpoint)
 
     for it in range(iters):
         fwd = graph.select("id", "nbr")
@@ -173,7 +176,7 @@ def knn_graph(
         scored = _score_pairs(two_hop, vecs).filter(F.col("score").isNotNull())
         new_graph = _top_k(
             graph.select("id", "nbr", "score").unionByName(scored), bk
-        ).localCheckpoint()
+        ).transform(local_checkpoint)
         changed = (
             new_graph.select("id", "nbr")
             .join(graph.select("id", "nbr"), ["id", "nbr"], "left_anti")
@@ -231,9 +234,9 @@ def graph_search(
     projection + norm recompute.
     """
     if set(corpus.columns) == {"id", "vec", "n2"}:
-        vecs = corpus.localCheckpoint()
+        vecs = local_checkpoint(corpus)
     else:
-        vecs = spread_input(_prep(corpus, id_col, vec_col)).localCheckpoint()
+        vecs = local_checkpoint(spread_input(_prep(corpus, id_col, vec_col)))
     adj = graph.select("id", "nbr")
 
     entry = (
@@ -267,9 +270,11 @@ def graph_search(
         seeded.withColumn("_r", F.row_number().over(wb))
         .filter(F.col("_r") <= max(entries, beam))
         .drop("_r")
-        .localCheckpoint()
+        .transform(local_checkpoint)
     )
-    visited = first.unionByName(best.select("q_id", "c_id")).distinct().localCheckpoint()
+    visited = local_checkpoint(
+        first.unionByName(best.select("q_id", "c_id")).distinct()
+    )
 
     for _ in range(hops):
         frontier = (
@@ -289,12 +294,12 @@ def graph_search(
             .withColumn("_r", F.row_number().over(wb))
             .filter(F.col("_r") <= beam)
             .drop("_r")
-            .localCheckpoint()
+            .transform(local_checkpoint)
         )
         new_visited = (
             visited.unionByName(gained.select("q_id", "c_id"))
             .distinct()
-            .localCheckpoint()
+            .transform(local_checkpoint)
         )
         grew = new_best.join(
             best.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"

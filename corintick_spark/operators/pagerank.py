@@ -50,7 +50,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import (
+    local_checkpoint,
+    release_local_checkpoint,
+)
 
 
 def pagerank(
@@ -278,7 +281,7 @@ def pagerank(
         # the plan still grows ~2^K per segment on this path; cap it
         k = min(k, 4)
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
+    ranks = local_checkpoint(ranks)
     done = 0
     while done < iterations:
         seg = min(k, iterations - done)
@@ -286,7 +289,7 @@ def pagerank(
         for i in range(seg):
             plan = step(plan, with_diff=(i == seg - 1))
         prev = ranks
-        ranks = plan.localCheckpoint(eager=True)  # one job per segment
+        ranks = local_checkpoint(plan)  # one job per segment
         # real release (Dataset.unpersist is a no-op on localCheckpointed
         # frames — blocks otherwise accumulate per segment, ckpt.py)
         release_local_checkpoint(prev)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from corintick_spark.operators.ckpt import local_checkpoint
+
 BUCKETS = 1 << 16
 
 
@@ -152,7 +154,7 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
             "hi",
             F.expr("greatest(1L, (qm * n + 999999) div 1000000)").alias("k"),
         )
-        .localCheckpoint()
+        .transform(local_checkpoint)
     )
     n_pairs = bounds.count()
     if n_pairs > GROUPS_MAX:
@@ -238,7 +240,7 @@ def _grouped_refine(df: DataFrame, group: str, col: str, qs: "list[float]") -> D
                 "lo + (CAST(b AS DECIMAL(10,0)) + 1) * sz - 1) AS BIGINT)"
             ).alias("hi"),
             (F.col("k") - (F.col("cum") - F.col("c"))).alias("k"),
-        ).localCheckpoint()
+        ).transform(local_checkpoint)
     out = solved_parts[0]
     for part in solved_parts[1:]:
         out = out.unionByName(part)

@@ -49,6 +49,7 @@ shapes via the invariant sweep).
 from __future__ import annotations
 
 from corintick_spark.catalog import register_views
+from corintick_spark.operators.ckpt import local_checkpoint
 from corintick_spark.registry import query
 
 
@@ -459,7 +460,7 @@ def sql_recursive(spark, sf_dir):
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         WHERE c.c_nationkey <> s.s_nationkey
-    """).localCheckpoint(eager=True)
+    """).transform(local_checkpoint)
     edges.createOrReplaceTempView("edges_mat_recursive")
     return spark.sql("""
         WITH RECURSIVE reach(nation, hops) AS (

@@ -91,10 +91,11 @@ def get_spark(
         # no query result or plan is affected.
         "spark.sql.ui.retainedExecutions": "50",
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-        # Returned frames' localCheckpoint blocks are freed by the
-        # ContextCleaner once their JVM objects are collected (ckpt.py). A
-        # session that never triggers a GC itself (notebook, test run)
-        # would otherwise wait on Spark's 30min default for that.
+        # The ContextCleaner frees a dropped frame's shuffle files,
+        # broadcasts and checkpoint blocks only after a JVM GC. Checkpoints
+        # trigger one themselves (ckpt.py); for the rest, a session that
+        # never GCs (notebook, test run) would wait on Spark's 30min
+        # default.
         "spark.cleaner.periodicGC.interval": "60s",
     }
     for k, v in {**static, **RUNTIME_CONFS, **(extra_conf or {})}.items():

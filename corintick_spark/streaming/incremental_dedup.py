@@ -50,7 +50,10 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from corintick_spark.operators import dedup as D
-from corintick_spark.operators.ckpt import release_local_checkpoint
+from corintick_spark.operators.ckpt import (
+    local_checkpoint,
+    release_local_checkpoint,
+)
 
 
 def frame_stream_batched(
@@ -169,7 +172,7 @@ def make_batch_processor(
         # store join, and the intra-batch join
         sig = D.minhash_signature_table(
             batch_df, id_col, text, k, num_hashes
-        ).localCheckpoint(eager=True)
+        ).transform(local_checkpoint)
 
         # vs the store (earlier batches + any warm-start corpus)
         prior = _store_paths(batch_id)
@@ -228,7 +231,7 @@ def make_batch_processor(
                 F.col("matched_id").isNotNull().alias("is_dup"),
                 "matched_id",
             )
-            .localCheckpoint(eager=True)
+            .transform(local_checkpoint)
         )
         survivors = sig.join(
             decisions.filter("is_dup").select(F.col(id_col).alias("_d")),
@@ -328,7 +331,7 @@ def make_hamming_batch_processor(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # one signing pass feeds the store join, the intra-batch join,
         # and the survivor write
-        sig = signer(batch_df).localCheckpoint(eager=True)
+        sig = local_checkpoint(signer(batch_df))
 
         prior = _store_epoch_paths(store_path, batch_id)
         if prior:
@@ -361,7 +364,7 @@ def make_hamming_batch_processor(
                 F.col("matched_id").isNotNull().alias("is_dup"),
                 "matched_id",
             )
-            .localCheckpoint(eager=True)
+            .transform(local_checkpoint)
         )
         survivors = sig.join(
             decisions.filter("is_dup").select(F.col(id_col).alias("_d")),

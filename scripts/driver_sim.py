@@ -3,7 +3,8 @@ subset / --all) under a VANILLA SparkSession against a chosen sf dir and
 adjudicate each oracle-paired query against DuckDB with the identical
 bar the external driver applies (tests/oracle.py: row count + schema
 class + order-insensitive exact values). Rows-only queries are run and
-their inv_ok column checked in every row.
+their inv_ok column checked in every row. Like the driver, it runs the
+queries back to back: no GC or release between them.
 
 Usage:
     python scripts/driver_sim.py [--sf /root/testdata/sf0.01]
@@ -13,7 +14,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
@@ -74,11 +74,6 @@ def main() -> int:
             problems, status = [f"{type(e).__name__}: {e}"], "ERROR"
             pdf = None
         dt = time.time() - t0
-        # the query is fully materialized (toPandas): collect its frame on
-        # both sides so the ContextCleaner frees its checkpoint blocks
-        # before the next query (ckpt.py)
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
         ok = status in ("MATCH", "ROWS-ONLY-OK")
         n_ok += ok
         n_bad += not ok

@@ -11,7 +11,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
@@ -41,6 +40,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from corintick_spark.catalog import table
+    from corintick_spark.operators.ckpt import collect_released
     from corintick_spark.registry import load_all
 
     registry = load_all()
@@ -79,8 +79,7 @@ def main() -> None:
             vals.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
             # same post-materialization block hygiene as bench.py
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            collect_released(spark)
         samples[name] = [round(v, 3) for v in vals]
         # warm median: drop the first pass when >1 pass ran
         timed = vals[1:] if len(vals) > 1 else vals

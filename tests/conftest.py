@@ -42,6 +42,7 @@ _SLOW_FILES: dict[str, set[str]] = {
         "test_connected_components_path_graph_high_diameter",
         "test_connected_components_random_vs_union_find",
         "test_connected_components_max_iter_exhausted_raises",
+        "test_connected_components_fixpoint_at_max_iter_returns",
         "test_pagerank_matches_numpy_power_iteration",
         "test_operators_accept_empty_inputs",
         # TickStore read route (sidecar schema, uid directories as paths)

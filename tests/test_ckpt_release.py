@@ -1,18 +1,28 @@
 """Checkpoint lifetime (operators/ckpt.py) and the streaming worker-spawn
 flake retry matcher. Loops release their own rounds; returned frames keep
-their blocks until the ContextCleaner sees them unreachable, so any number
-of live results stays evaluable and a long session stays bounded.
+their blocks until the ContextCleaner sees them unreachable, and
+``local_checkpoint`` collects dropped frames once ``_SLACK`` of them pile
+up, so any number of live results stays evaluable and a long session
+stays bounded without the caller's help.
 """
 
 from __future__ import annotations
 
-import gc
+import time
+
+from corintick_spark.operators import ckpt
 
 
-def _collect_garbage(spark) -> None:
-    """Python then JVM GC: what lets the ContextCleaner see dropped frames."""
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
+def _persistent(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _clean_slate(spark) -> int:
+    """Collect what other tests dropped; the cleaner frees it
+    asynchronously, so wait a moment before counting."""
+    ckpt.collect_released(spark)
+    time.sleep(0.5)
+    return _persistent(spark)
 
 
 def test_worker_spawn_flake_matcher():
@@ -42,10 +52,11 @@ def test_three_live_bfs_results_all_evaluate(spark):
 
 
 def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
-    """30 heavy query runs in ONE session with no explicit release of
-    returned frames: once they are garbage the ContextCleaner frees their
-    checkpoint blocks, so the persistent-RDD count stays bounded instead
-    of growing per pass.
+    """30 heavy query runs in ONE session with no GC and no release
+    between them: the way a driver that builds its own session runs a
+    sweep. Once returned frames are dropped, ``local_checkpoint`` gets
+    their blocks collected, so the persistent-RDD count stays under a
+    fixed bound instead of growing per pass.
 
     Round 11 measured ~1 GB of leaked localCheckpoint blocks per suite
     pass when returned frames' blocks were never freed (extras medians
@@ -61,23 +72,19 @@ def test_long_session_checkpoint_leak_bounded(spark, sf_dir):
         "graph_bfs", "sql_recursive", "agg_group_median",
         "text_heavyhitters",
     ]
-    _collect_garbage(spark)  # clean slate from other tests
+    base = _clean_slate(spark)
 
-    def persistent() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    counts = []
+    per_pass = []
     for _pass in range(3):
+        counts = []
         for n in names:
             registry[n].spark(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        _collect_garbage(spark)
-        counts.append(persistent())
-    # steady state is reached by pass 2: pass 3 must not accumulate past
-    # it by more than a couple of frames
-    assert counts[2] <= counts[1] + 2, counts
-    # and the absolute count stays at a few frames per operator, nowhere
-    # near the grow-per-pass shape of never-freed blocks
-    assert counts[2] <= 5 * len(names), counts
-    _collect_garbage(spark)
+            counts.append(_persistent(spark))
+        per_pass.append(counts)
+    # between collections dropped frames add at most the slack; the rest
+    # is what the query just run still holds, what the SQL status store
+    # still pins, and the cleaner's asynchronous lag
+    assert max(map(max, per_pass)) <= base + ckpt._SLACK + 10, (base, per_pass)
+    ckpt.collect_released(spark)

@@ -562,6 +562,50 @@ def test_connected_components_max_iter_exhausted_raises(spark):
         connected_components(edges, max_iter=1)
 
 
+def test_connected_components_fixpoint_at_max_iter_returns(spark):
+    """A graph whose edge list is the fixpoint after exactly ``max_iter``
+    rounds returns its labels; one round fewer raises. The round count
+    comes from a driver-side replay of the large-star/small-star rounds;
+    a star forest is its own fixpoint, so it needs no round at all."""
+    from corintick_spark.operators.dup_clusters import connected_components
+
+    def star_round(e):
+        sym = e | {(v, u) for u, v in e}
+        m = {}
+        for u, v in sym:
+            m[u] = min(m.get(u, u), v)
+        large = {(v, m[u]) for u, v in sym if v > u}
+        m = {}
+        for u, v in large:
+            m[u] = min(m.get(u, v), v)
+        small = {(v, m[u]) for u, v in large} | set(m.items())
+        return {(u, v) for u, v in small if u != v}
+
+    def fixpoint_round(pairs):
+        e, rounds = {(max(p), min(p)) for p in pairs}, 0
+        while star_round(e) != e:
+            e, rounds = star_round(e), rounds + 1
+        return rounds
+
+    stars = [(1, 0), (0, 2), (3, 0), (5, 4)]
+    path = [(i, i + 1) for i in range(15)]
+    assert fixpoint_round(stars) == 0
+    cap = fixpoint_round(path)
+    assert cap >= 2
+    for pairs, want in [
+        (stars, {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4}),
+        (path, {i: 0 for i in range(16)}),
+    ]:
+        edges = spark.createDataFrame(pairs, "a_id long, b_id long")
+        rows = connected_components(edges, max_iter=fixpoint_round(pairs))
+        assert {r["node"]: r["comp"] for r in rows.collect()} == want
+    with pytest.raises(RuntimeError, match=f"max_iter={cap - 1}"):
+        connected_components(
+            spark.createDataFrame(path, "a_id long, b_id long"),
+            max_iter=cap - 1,
+        )
+
+
 def test_connected_components_random_vs_union_find(spark):
     """Randomized differential vs a driver-side union-find oracle."""
     import random
